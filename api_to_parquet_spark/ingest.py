@@ -12,9 +12,12 @@ Reference bugs intentionally NOT reproduced (SURVEY.md §7):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from api_to_parquet_spark import state
 from api_to_parquet_spark.schemas import (
     ENVELOPE_SCHEMA,
     PARTITION_COLUMNS,
@@ -60,26 +63,42 @@ def validate_envelopes(envelopes: DataFrame) -> tuple[DataFrame, DataFrame]:
     return envelopes.filter(pred), envelopes.filter(~pred)
 
 
-def explode_points(envelopes: DataFrame) -> DataFrame:
-    """Envelope → flat fact rows, keeping batch lineage columns.
+_LINEAGE = ["batch_id", "batch_source", "time_generated", "file"]
 
-    One explode, no shuffle: this runs map-side wherever each envelope
-    lives, which is what makes ingest embarrassingly parallel at 100 TB.
-    """
+
+def _lineage(envelopes: DataFrame) -> DataFrame:
+    """Envelope fields renamed to the lineage columns every point carries."""
     return envelopes.select(
         F.col("id").alias("batch_id"),
         F.col("source").alias("batch_source"),
         F.col("timeGenerated").alias("time_generated"),
-        F.col("file"),
-        F.explode("content").alias("p"),
-    ).select("batch_id", "batch_source", "time_generated", "file", "p.*")
+        "file",
+        "content",
+    )
+
+
+def _explode(env: DataFrame, *keep: str) -> DataFrame:
+    """One row per `content` point: lineage, point fields, then `keep`.
+
+    One explode, no shuffle: this runs map-side wherever each envelope
+    lives, which is what makes ingest embarrassingly parallel at 100 TB.
+    """
+    return env.select(
+        *_LINEAGE, F.explode("content").alias("p"), *keep
+    ).select(*_LINEAGE, "p.*", *keep)
+
+
+def explode_points(envelopes: DataFrame) -> DataFrame:
+    """Envelope → raw fact rows (no zero fill, no partitions), for the
+    streaming state aggregations, whose grouping keys keep NULL apart
+    from ""."""
+    return _explode(_lineage(envelopes))
 
 
 def normalize_points(points: DataFrame) -> DataFrame:
     """Apply Go zero-value semantics (SURVEY.md §1.2): absent JSON fields
     are zero-filled, never NULL — strings → "", numerics → 0."""
-    filled = points.fillna(ZERO_FILL)
-    return filled
+    return points.fillna(ZERO_FILL)
 
 
 def derive_partitions(points: DataFrame) -> DataFrame:
@@ -104,49 +123,45 @@ def derive_partitions(points: DataFrame) -> DataFrame:
     )
 
 
+def lake_points(valid: DataFrame) -> DataFrame:
+    """Valid envelopes → normalized, partitioned points: what every lake
+    sink writes. The partition columns depend only on the envelope's
+    `file`, so they are derived once per envelope, before the explode
+    (per point, the 10x80k load spent ~1.4 s of a 3.2 s parse pass on
+    regexp_extract + md5). `_lineage` has already moved the envelope's
+    `source` to batch_source, so the path-derived `source` cannot clash."""
+    env = derive_partitions(_lineage(valid))
+    return normalize_points(_explode(env, *PARTITION_COLUMNS))
+
+
 def ingest_batch(raw_json: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Full ingest plan: raw JSON → (normalized partitioned points, rejected).
 
     Equivalent of the reference's POST / pipeline through the parquet
-    writer (src/main.go:250-298), minus the sink — callers hand the result
-    to lake.write_lake / streaming.foreach_batch_sink.
+    writer (src/main.go:250-298), minus the sink — callers hand the
+    points to commit_points.
     """
-    envelopes = parse_envelopes(raw_json)
-    valid, rejected = validate_envelopes(envelopes)
-    # Partition columns are functions of the ENVELOPE-level `file`
-    # path, so derive them before the explode — one regex chain + md5
-    # per envelope instead of per point row (round-15; the per-row
-    # shape cost ~1.4 s of the 3.2 s parse->noop pass at the bench's
-    # 10x80k load: 4M regexp_extract + 800k md5 calls for 10 distinct
-    # values). The envelope's own `source` is aliased to batch_source
-    # first so derive_partitions' path-derived `source` cannot clash.
-    # Column order and values are identical to the former
-    # derive-after-explode pipeline (pinned by tests/test_ingest.py).
-    env = derive_partitions(
-        valid.select(
-            F.col("id").alias("batch_id"),
-            F.col("source").alias("batch_source"),
-            F.col("timeGenerated").alias("time_generated"),
-            F.col("file"),
-            F.col("content"),
-        )
-    )
-    points = env.select(
-        "batch_id",
-        "batch_source",
-        "time_generated",
-        "file",
-        F.explode("content").alias("p"),
-        *PARTITION_COLUMNS,
-    ).select(
-        "batch_id",
-        "batch_source",
-        "time_generated",
-        "file",
-        "p.*",
-        *PARTITION_COLUMNS,
-    )
-    return normalize_points(points), rejected
+    valid, rejected = validate_envelopes(parse_envelopes(raw_json))
+    return lake_points(valid), rejected
+
+
+def commit_points(
+    spark: SparkSession,
+    points: DataFrame,
+    write: Callable[[DataFrame], object],
+    state_path: str,
+) -> Row:
+    """Commit one micro-batch, the body every ingest route shares:
+    `write(points)` lands the data, then state.update_state merges the
+    batch and its new row is returned. The points are persisted, so the
+    JSON parse runs once for both. Data goes before state: a crash in
+    between replays the batch, and the per-key overwrite is idempotent."""
+    points = points.persist()
+    try:
+        write(points)
+        return state.update_state(spark, state_path, points)
+    finally:
+        points.unpersist()
 
 
 def batch_stats(points: DataFrame) -> DataFrame:

@@ -13,8 +13,12 @@ Scale notes:
 - 128 MB row groups / snappy via session config (src/main.go:33-34).
 - Per-*file* overwrite parity (re-POST same `file` ⇒ replace that file,
   README.md:88) is provided by `write_batch_files`, which writes each
-  batch to its own deterministic directory keyed by the `file` path —
-  the Spark-native equivalent of one-blob-per-POST.
+  key's latest envelope (`latest_per_key`, shared with
+  snapshots.commit_batch) to its own deterministic directory
+  `<root>/<file>/part-*` — the Spark-native equivalent of
+  one-blob-per-POST. The service POST and both ingest streams wrap
+  their writer (this one, `write_lake` or snapshots.commit_batch) in
+  the same ingest.commit_points body.
 """
 
 from __future__ import annotations
@@ -113,6 +117,23 @@ def read_batch_tree(
     )
 
 
+def latest_per_key(points: DataFrame) -> list[tuple[str, DataFrame]]:
+    """`(file, rows)` per distinct key in the batch, the rows being only
+    that key's max-timeGenerated envelope: the reference applies several
+    envelopes for one key as sequential POSTs (src/main.go:306), so the
+    last one wins, never the union. One small aggregate job finds every
+    key's winner. A key's rows come from one envelope, so `coalesce(1)`
+    costs no parallelism and keeps it to one part file (over the input's
+    partitions, Spark would also write an empty file for partition 0)."""
+    winners = points.groupBy("file").agg(F.max("time_generated")).collect()
+    rows = points.drop(*PARTITION_COLUMNS)
+    file, tg = F.col("file"), F.col("time_generated")
+    return [
+        (key, rows.filter((file == key) & (tg == max_tg)).coalesce(1))
+        for key, max_tg in winners
+    ]
+
+
 def write_batch_files(points: DataFrame, lake_root: str) -> list[str]:
     """Exact per-file overwrite parity (ST3, reference README.md:88).
 
@@ -120,35 +141,13 @@ def write_batch_files(points: DataFrame, lake_root: str) -> list[str]:
     re-sending the same key replaces the old contents. Spark controls
     file naming inside a directory, so the deterministic unit here is a
     directory per `file` key — `<lake_root>/<file>/part-*.parquet` —
-    which readers treat identically to a single file (glob scan).
-
-    The loop is over *distinct batch keys in this micro-batch* (small:
-    one per POST), not over rows — each write is a distributed job.
-
-    Intra-batch last-write-wins: a micro-batch carrying SEVERAL
-    envelopes for one key keeps only the max-timeGenerated envelope's
-    rows — the reference applies them as sequential POSTs
-    (src/main.go:306), so the final state is the last one, never the
-    union.
+    which readers treat identically to a single file (glob scan). One
+    write job per distinct key in the batch (one per POST).
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("file")
-    points = (
-        points.withColumn("_max_tg", F.max("time_generated").over(w))
-        .filter(F.col("time_generated") == F.col("_max_tg"))
-        .drop("_max_tg")
-    )
-    keys = [r[0] for r in points.select("file").distinct().collect()]
-    for key in keys:
-        target = posixpath.join(lake_root, key)
-        (
-            points.filter(F.col("file") == key)
-            .drop(*PARTITION_COLUMNS)
-            .write.mode("overwrite")
-            .parquet(target)
-        )
-    return keys
+    winners = latest_per_key(points)
+    for key, rows in winners:
+        rows.write.mode("overwrite").parquet(posixpath.join(lake_root, key))
+    return [key for key, _ in winners]
 
 
 def register_testdata(spark: SparkSession, sf_dir: str) -> None:

@@ -16,7 +16,8 @@ queries.kql translator (or raw Spark SQL) instead of proxying.
 
 Scale honesty: this in-process server is the *protocol adapter*, not the
 scale path. One POST = one micro-batch through the same
-parse→validate→explode→normalize→write pipeline the streaming mode runs
+parse→validate→explode→normalize→write pipeline, committed by the same
+ingest.commit_points body the streaming mode runs
 (streaming.start_ingest_stream); a production deployment points many
 such stateless receivers at an envelope drop directory / queue and lets
 the single-writer streaming query own the lake and state (SURVEY.md
@@ -32,6 +33,7 @@ from __future__ import annotations
 import base64
 import datetime
 import json
+import logging
 import threading
 from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -41,6 +43,8 @@ from pyspark.sql import Row, SparkSession
 
 from api_to_parquet_spark import ingest, lake, state
 from api_to_parquet_spark.queries.kql import _REQUEST_DB, kql
+
+_log = logging.getLogger(__name__)
 
 # /query response row cap; truncated responses carry Kusto's partial-
 # results signal (v1 `Exceptions` entry; `"truncated": true` in the
@@ -167,15 +171,21 @@ class LakeService:
                 return 400, {"error": msg}
         if not record.get("content"):
             return 400, {"error": "Malformed request: content is empty"}
-        raw = self.spark.createDataFrame(
-            [(body.decode("utf-8"),)], ["value"]
-        )
-        points, _ = ingest.ingest_batch(raw)
-        with self._write_lock:
-            lake.write_batch_files(points, self.lake_root)
-            new_state = state.update_state(
-                self.spark, self.state_path, points
+        try:
+            raw = self.spark.createDataFrame(
+                [(body.decode("utf-8"),)], ["value"]
             )
+            points, _ = ingest.ingest_batch(raw)
+            with self._write_lock:
+                new_state = ingest.commit_points(
+                    self.spark,
+                    points,
+                    lambda p: lake.write_batch_files(p, self.lake_root),
+                    self.state_path,
+                )
+        except Exception as e:  # noqa: BLE001 — engine failure -> 500
+            _log.exception("POST / failed")
+            return 500, {"error": str(e)[:2000]}
         return 200, {
             "id": record["id"],
             "timeGenerated": record["timeGenerated"],
@@ -183,7 +193,11 @@ class LakeService:
         }
 
     def get_state(self) -> tuple[int, dict]:
-        st = state.read_state(self.spark, self.state_path)
+        try:
+            st = state.read_state(self.spark, self.state_path)
+        except Exception as e:  # noqa: BLE001 — engine failure -> 500
+            _log.exception("GET / failed")
+            return 500, {"error": str(e)[:2000]}
         return 200, {
             "lastTimeGenerated": st["last_time_generated"] or 0,
             "maxTimestamp": st["max_timestamp"] or 0,

@@ -38,7 +38,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from api_to_parquet_spark.schemas import PARTITION_COLUMNS
+from api_to_parquet_spark import lake
 
 _MANIFESTS = "_manifests"
 _DATA = "_data"
@@ -108,37 +108,16 @@ def commit_batch(
     spark: SparkSession, root: str, points: DataFrame
 ) -> int:
     """Commit one ingested batch (normalized points carrying the `file`
-    column): each distinct `file` key's rows land in a fresh data
-    directory, then the next manifest atomically re-points those keys.
+    column): each distinct `file` key's latest envelope
+    (lake.latest_per_key) lands in a fresh data directory, then the next
+    manifest atomically re-points those keys.
     Returns the committed version number. Replaying a key leaves the old
     directory in place for time travel until vacuum."""
-    from pyspark.sql import Window
-
-    # Intra-batch last-write-wins: one micro-batch may carry SEVERAL
-    # envelopes for the same `file` key (the reference would apply them
-    # as sequential POSTs — final state is the LAST one, main.go:306);
-    # keep only rows from each key's max timeGenerated envelope.
-    w = Window.partitionBy("file")
-    points = (
-        points.withColumn(
-            "_max_tg", F.max("time_generated").over(w)
-        )
-        .filter(F.col("time_generated") == F.col("_max_tg"))
-        .drop("_max_tg")
-    )
-    keys = [r[0] for r in points.select("file").distinct().collect()]
     versions = _list_versions(spark, root)
-    manifest = (
-        _read_manifest(spark, root, versions[-1]) if versions else {}
-    )
-    for key in keys:
+    manifest = _read_manifest(spark, root, versions[-1]) if versions else {}
+    for key, rows in lake.latest_per_key(points):
         data_dir = f"{_DATA}/{uuid.uuid4().hex}"
-        (
-            points.filter(F.col("file") == key)
-            .drop(*PARTITION_COLUMNS)
-            .write.mode("error")
-            .parquet(posixpath.join(root, data_dir))
-        )
+        rows.write.mode("error").parquet(posixpath.join(root, data_dir))
         manifest[key] = data_dir
     next_version = (versions[-1] + 1) if versions else 0
     _write_manifest(spark, root, next_version, manifest)

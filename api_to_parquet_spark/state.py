@@ -10,6 +10,7 @@ the same two scalars in the Structured Streaming state store
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -25,10 +26,14 @@ STATE_SCHEMA = T.StructType(
 
 
 def read_state(spark: SparkSession, state_path: str) -> Row:
-    """GET / equivalent (reference src/main.go:234-245)."""
+    """GET / equivalent (reference src/main.go:234-245). A missing
+    control table is the empty state; any other read failure raises, so
+    update_state never merges a batch into a state it could not read."""
     try:
         rows = spark.read.schema(STATE_SCHEMA).parquet(state_path).collect()
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         rows = []
     if not rows:
         return Row(last_time_generated=None, max_timestamp=None)
@@ -43,26 +48,16 @@ def update_state(spark: SparkSession, state_path: str, points: DataFrame) -> Row
     monotonic. One tiny agg job over the batch + a single-row write —
     no full-lake scan, so cost is independent of lake size.
     """
-    agg = points.agg(
-        F.max("time_generated").alias("batch_time_generated"),
-        F.max("Timestamp").alias("batch_max_ts"),
+    batch_tg, batch_max = points.agg(
+        F.max("time_generated"), F.max("Timestamp")
     ).collect()[0]
     prev = read_state(spark, state_path)
-
-    def merge_max(a: int | None, b: int | None) -> int | None:
-        if a is None:
-            return b
-        if b is None:
-            return a
-        return max(a, b)
-
+    maxes = [m for m in (prev["max_timestamp"], batch_max) if m is not None]
     new = Row(
         last_time_generated=(
-            agg["batch_time_generated"]
-            if agg["batch_time_generated"] is not None
-            else prev["last_time_generated"]
+            prev["last_time_generated"] if batch_tg is None else batch_tg
         ),
-        max_timestamp=merge_max(prev["max_timestamp"], agg["batch_max_ts"]),
+        max_timestamp=max(maxes, default=None),
     )
     spark.createDataFrame([new], STATE_SCHEMA).coalesce(1).write.mode(
         "overwrite"

@@ -5,9 +5,12 @@ micro-batches (SURVEY.md §2.9) as a streaming query.
   state lives in the Structured Streaming state store, checkpointed;
   single-writer semantics — strictly stronger than the reference's
   non-atomic Redis read-compare-write across replicas.
-- ST3 (idempotent replay / per-file overwrite): foreachBatch sink reusing
-  the batch lake writer — deterministic target per `file` key, so a
-  replayed micro-batch overwrites instead of duplicating.
+- ST3 (idempotent replay / per-file overwrite): one foreachBatch body
+  for both ingest streams, committing through ingest.commit_points — the
+  same persist → write → state merge the service's POST runs — with
+  `lake.write_lake` (partition overwrite) or `snapshots.commit_batch`
+  (per-`file`-key manifest commit) as the writer, so a replayed
+  micro-batch overwrites instead of duplicating.
 - ST4 extensions: event-time watermark + tumbling-window aggregation
   (absent in the reference, standard for late data at scale).
 
@@ -17,13 +20,15 @@ The batch and streaming paths share the exact same DataFrame transforms
 
 from __future__ import annotations
 
+from typing import Callable
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from api_to_parquet_spark import ingest, lake, state
+from api_to_parquet_spark import ingest, lake
 
 
 def read_envelope_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -32,6 +37,35 @@ def read_envelope_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     identical."""
     raw = spark.readStream.schema("value STRING").text(input_dir)
     return ingest.parse_envelopes(raw)
+
+
+def _start_commit_stream(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint: str,
+    available_now: bool,
+    state_path: str,
+    write: Callable[[DataFrame], object],
+) -> StreamingQuery:
+    """The foreachBatch body both ingest streams share: validate →
+    lake_points → ingest.commit_points with the stream's writer. A
+    micro-batch without a valid envelope commits nothing."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        valid, _rejected = ingest.validate_envelopes(batch_df)
+        if not valid.isEmpty():
+            ingest.commit_points(
+                spark, ingest.lake_points(valid), write, state_path
+            )
+
+    writer = (
+        read_envelope_stream(spark, input_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_ingest_stream(
@@ -43,31 +77,14 @@ def start_ingest_stream(
     available_now: bool = False,
 ) -> StreamingQuery:
     """The reference's POST / loop as one streaming query: parse →
-    validate → normalize → partitioned lake append + control-table merge,
-    per micro-batch. foreachBatch gives exactly-once-per-batch sinks via
-    the checkpointed batch id + idempotent partition overwrite."""
-    envelopes = read_envelope_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        valid, _rejected = ingest.validate_envelopes(batch_df)
-        points = ingest.derive_partitions(
-            ingest.normalize_points(ingest.explode_points(valid))
-        )
-        if points.isEmpty():
-            return
-        points = points.persist()
-        try:
-            lake.write_lake(points, lake_path, mode="overwrite")
-            state.update_state(spark, state_path, points)
-        finally:
-            points.unpersist()
-
-    writer = envelopes.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint
+    validate → normalize → partitioned lake overwrite + control-table
+    merge, per micro-batch. foreachBatch gives exactly-once-per-batch
+    sinks via the checkpointed batch id + idempotent partition
+    overwrite."""
+    return _start_commit_stream(
+        spark, input_dir, checkpoint, available_now, state_path,
+        lambda points: lake.write_lake(points, lake_path, mode="overwrite"),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_snapshot_ingest_stream(
@@ -87,28 +104,10 @@ def start_snapshot_ingest_stream(
     version, same rows)."""
     from api_to_parquet_spark import snapshots
 
-    envelopes = read_envelope_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        valid, _rejected = ingest.validate_envelopes(batch_df)
-        points = ingest.derive_partitions(
-            ingest.normalize_points(ingest.explode_points(valid))
-        )
-        if points.isEmpty():
-            return
-        points = points.persist()
-        try:
-            snapshots.commit_batch(spark, snapshot_root, points)
-            state.update_state(spark, state_path, points)
-        finally:
-            points.unpersist()
-
-    writer = envelopes.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint
+    return _start_commit_stream(
+        spark, input_dir, checkpoint, available_now, state_path,
+        lambda points: snapshots.commit_batch(spark, snapshot_root, points),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_state_stream(

@@ -124,8 +124,9 @@ def compact_line(full: dict) -> str:
     Keeps the contract keys verbatim (metric/value/unit/queries/sf),
     adds the cpu-echo keys, and compacts flag blocks to name -> ratio.
     If still over budget, optional blocks are dropped in increasing
-    order of importance (the full detail is always in BENCH_SIDE.json);
-    the contract keys and the gate flags are never dropped.
+    order of importance (the full detail is always in BENCH_SIDE.json),
+    then the gate flags shrink to their count plus the worst offender;
+    the contract keys are never dropped.
     """
     payload: dict = {
         k: full[k]
@@ -154,7 +155,18 @@ def compact_line(full: dict) -> str:
         if len(line) <= LINE_BUDGET:
             return line
         payload.pop(drop, None)
-    return json.dumps(payload)
+    line = json.dumps(payload)
+    flags = payload.get("ratio_regressions")
+    if len(line) > LINE_BUDGET and flags:
+        # too many flags to list: keep their count and the worst
+        # pin ratio (the ingest floor flag carries rows/s, not a ratio)
+        entries = full["ratio_regressions"]
+        worst = max(flags, key=lambda n: entries[n].get("pin_ratio") or 0.0)
+        payload["ratio_regressions"] = {
+            "count": len(flags), "worst": {worst: flags[worst]},
+        }
+        line = json.dumps(payload)
+    return line
 
 
 def compute_flags(

@@ -265,3 +265,29 @@ def test_compact_line_keeps_optional_blocks_when_small():
     assert parsed["retest_cleared"] == {"r": 1.2}
     assert parsed["master"] == "local[32]"
     assert len(compact_line(full)) <= LINE_BUDGET
+
+
+def test_compact_line_summarises_oversized_regressions():
+    """A regression map too large for the line even after the optional
+    blocks are dropped shrinks to its count plus the worst offender."""
+    import json
+
+    flags = {
+        f"kql_query_name_{i:02d}": {"pin_ratio": 2.0 + i / 100}
+        for i in range(46)
+    }
+    flags["ingest_rows_per_sec_normalized"] = {
+        "now_normalized": 150000.0, "pin": 280000.0,
+    }
+    full = _full_payload(
+        ratio_regressions=flags,
+        retest_cleared={"r": {"retest_ratio": 1.2}},
+        errors={"kql_query_name_45": "x" * 200},
+    )
+    line = compact_line(full)
+    assert len(line) <= LINE_BUDGET
+    parsed = json.loads(line)
+    assert parsed["ratio_regressions"] == {
+        "count": 47, "worst": {"kql_query_name_45": 2.45},
+    }
+    assert len(parsed["queries"]) == 46

@@ -128,6 +128,20 @@ def test_empty_series_raises_on_both_paths(spark):
         spark.sql(kql_to_sql(body, None)).collect()
 
 
+def test_decompose_empty_series_matches_sql(spark):
+    """Plain series_decompose on an empty series: the linefit's
+    `icept / n` is NULL / 0.0, which Spark ANSI evaluates to NULL (a
+    NULL numerator is checked before the zero divisor), so both paths
+    return a row instead of raising."""
+    spark.sql("SELECT array() AS y").createOrReplaceTempView(
+        "sda_probe_t"
+    )
+    body = "sda_probe_t | extend (bl, se, tr, re) = series_decompose(y, 3)"
+    arrow, sql = _run_both(spark, body)
+    assert len(sql) == 1
+    _assert_rows_equal(arrow, sql)
+
+
 def test_arrow_path_plan_shape(spark):
     """The session path must evaluate the chain in ONE ArrowEvalPython
     node — Arrow-batched, never pickled rows, no duplicated UDF eval."""

@@ -110,3 +110,43 @@ def test_write_batch_files_intra_batch_last_write_wins(spark, tmp_path):
     lake.write_batch_files(points, str(tmp_path / "lake"))
     rows = spark.read.parquet(str(tmp_path / "lake" / key)).collect()
     assert [r["Timestamp"] for r in rows] == [99]
+
+
+def _envelope(file, ts_values, time_generated):
+    return json.dumps(
+        {
+            "content": [{"Timestamp": t, "Value": float(t)} for t in ts_values],
+            "id": f"b{time_generated}",
+            "source": "s",
+            "timeGenerated": time_generated,
+            "file": file,
+        }
+    )
+
+
+def multi_partition_points(spark):
+    """Three keys, one replayed inside the batch, spread over four input
+    partitions: returns (keys, points, {key: winning timestamps})."""
+    keys = [f"s/2023/10/26/{h}/k.parquet" for h in (19, 20, 21)]
+    envs = [
+        _envelope(keys[0], [1, 2], 1),
+        _envelope(keys[1], [3], 1),
+        _envelope(keys[0], [9], 2),
+        _envelope(keys[2], [4, 5, 6], 1),
+    ]
+    raw = spark.createDataFrame([(e,) for e in envs], ["value"]).repartition(4)
+    points, _ = ingest.ingest_batch(raw)
+    assert points.rdd.getNumPartitions() == 4
+    return keys, points, {keys[0]: [9], keys[1]: [3], keys[2]: [4, 5, 6]}
+
+
+def test_write_batch_files_one_part_file_per_key(spark, tmp_path):
+    """A multi-partition batch still lands as exactly one part file per
+    key: no empty part file from an input partition without the key."""
+    keys, points, want = multi_partition_points(spark)
+    root = tmp_path / "lake"
+    assert sorted(lake.write_batch_files(points, str(root))) == keys
+    for key in keys:
+        assert len(list((root / key).glob("part-*.parquet"))) == 1
+        rows = spark.read.parquet(str(root / key)).collect()
+        assert sorted(r["Timestamp"] for r in rows) == want[key]

@@ -80,6 +80,39 @@ def test_ingest_state_replay_roundtrip(spark, server):
     assert (st["lastTimeGenerated"], st["maxTimestamp"]) == (9, 300)
 
 
+def test_failed_write_returns_500_and_keeps_state(server, monkeypatch):
+    """An engine error in the commit is a 500 reply, not a dropped
+    connection; the server keeps answering and the state is untouched
+    (data is written before state, and the write failed)."""
+    from api_to_parquet_spark import lake
+
+    base, _ = server
+    key = "factory-1/2023/10/26/19/a.parquet"
+    assert _post(base + "/", _envelope(key, [100], 7))[0] == 200
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(lake, "write_batch_files", fail)
+    status, body = _post(base + "/", _envelope(key, [999], 8))
+    assert status == 500 and "injected write failure" in body["error"]
+    status, st = _get(base + "/")
+    assert (status, st["lastTimeGenerated"], st["maxTimestamp"]) == (200, 7, 100)
+
+
+def test_failed_state_read_returns_500(server, monkeypatch):
+    from api_to_parquet_spark import state
+
+    base, _ = server
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected read failure")
+
+    monkeypatch.setattr(state, "read_state", fail)
+    status, body = _get(base + "/")
+    assert status == 500 and "injected read failure" in body["error"]
+
+
 def test_reference_error_contract(server):
     base, _ = server
     env = _envelope("f/2024/01/01/00/a.parquet", [1], 5)

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
+from test_lake import multi_partition_points
 
 from api_to_parquet_spark import ingest, snapshots
 
@@ -241,3 +243,29 @@ def test_compact_converges(spark, tmp_path):
     v = snapshots.compact(spark, root, target_bytes=10 * 1024 * 1024)
     assert v >= 0
     assert snapshots.compact(spark, root, target_bytes=10 * 1024 * 1024) == -1
+
+
+def test_commit_batch_one_part_file_per_key(spark, tmp_path):
+    """commit_batch over a multi-partition batch writes exactly one
+    part file per key (no empty file from partition 0)."""
+    keys, points, _ = multi_partition_points(spark)
+    root = str(tmp_path / "snaplake")
+    snapshots.commit_batch(spark, root, points)
+    manifest = snapshots.history(spark, root)[-1]["keys"]
+    assert sorted(manifest) == keys
+    for key in keys:
+        parts = list((Path(root) / manifest[key]).glob("part-*.parquet"))
+        assert len(parts) == 1
+
+
+def test_commit_batch_intra_batch_last_write_wins(spark, tmp_path):
+    """Several envelopes for one key in ONE batch: the snapshot keeps
+    only the max-timeGenerated envelope's rows, never the union — the
+    twin of test_write_batch_files_intra_batch_last_write_wins."""
+    _, points, want = multi_partition_points(spark)
+    root = str(tmp_path / "snaplake")
+    snapshots.commit_batch(spark, root, points)
+    got: dict[str, list[int]] = {}
+    for r in snapshots.read_snapshot(spark, root).collect():
+        got.setdefault(r["file"], []).append(r["Timestamp"])
+    assert {k: sorted(v) for k, v in got.items()} == want

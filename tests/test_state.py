@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from api_to_parquet_spark import ingest, state
 
 
@@ -43,3 +45,19 @@ def test_last_write_wins(spark, tmp_path):
 def test_empty_state(spark, tmp_path):
     row = state.read_state(spark, str(tmp_path / "nope"))
     assert row["max_timestamp"] is None
+
+
+def test_unreadable_state_raises_and_is_not_rewritten(spark, tmp_path):
+    """Only a MISSING control table reads as empty: a corrupt one must
+    raise, or update_state would write the batch max as the new
+    max_timestamp and silently break monotonicity."""
+    path = tmp_path / "state"
+    path.mkdir()
+    bad = path / "part-0.parquet"
+    bad.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        state.read_state(spark, str(path))
+    with pytest.raises(Exception):
+        state.update_state(spark, str(path), _batch(spark, [100], 1))
+    assert [p.name for p in path.iterdir()] == ["part-0.parquet"]
+    assert bad.read_bytes() == b"not a parquet file"

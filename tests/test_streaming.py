@@ -54,6 +54,35 @@ def test_ingest_stream_end_to_end(spark, tmp_path):
     assert st["last_time_generated"] == 2  # arrival order
 
 
+def test_ingest_stream_writes_what_ingest_batch_plans(spark, tmp_path):
+    """The streaming sink and the service share one explode: the lake
+    holds exactly ingest_batch's rows for the same envelopes, partition
+    columns and zero-filled fields included."""
+    from api_to_parquet_spark import ingest
+
+    envs = [
+        _envelope("s/2024/01/01/00/a.parquet", [100, 200], 1),
+        _envelope("t/2024/02/03/04/b.parquet", [300], 2),
+        _envelope("not-a-lake-path.parquet", [400], 3),
+    ]
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "batch.json").write_text("\n".join(envs) + "\n")
+    lake_path = str(tmp_path / "lake")
+    q = streaming.start_ingest_stream(
+        spark, str(inp), lake_path, str(tmp_path / "state"),
+        str(tmp_path / "ckpt"), available_now=True,
+    )
+    q.awaitTermination(120)
+    want, _ = ingest.ingest_batch(
+        spark.createDataFrame([(e,) for e in envs], ["value"])
+    )
+    got = lake.read_lake(spark, lake_path).select(*want.columns)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
 def test_state_stream_running_max(spark, tmp_path):
     inp = tmp_path / "in"
     inp.mkdir()
